@@ -358,8 +358,8 @@ def score_mentions_pandas(
     import pandas as pd
 
     from bootleg_spark.functions.embedding import (
+        candidate_matrix,
         featurize_tokens,
-        featurize_texts,
         score_batch,
     )
 
@@ -385,15 +385,7 @@ def score_mentions_pandas(
             else:
                 ctx = encoder([" ".join(tl) for tl in toks], dim)
             cl = [cands[a] for a in pdf["alias"]]
-            k = max(len(c) for c in cl)
-            ent = np.zeros((n, k, dim), dtype=np.float64)
-            mask = np.zeros((n, k), dtype=bool)
-            for i, cands_i in enumerate(cl):
-                for j, q in enumerate(cands_i):
-                    row = qid2row.get(q)
-                    if row is not None:
-                        ent[i, j] = mat[row]
-                        mask[i, j] = True
+            ent, mask = candidate_matrix(cl, qid2row, mat)
             probs, arg = score_batch(ctx, ent, mask)
             yield pd.DataFrame(
                 {

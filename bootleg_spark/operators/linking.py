@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from bootleg_spark import synthspec as S
-from bootleg_spark.functions.embedding import featurize_texts, score_batch
+from bootleg_spark.functions.embedding import candidate_matrix, featurize_texts, score_batch
 from bootleg_spark.functions.textproc import (
     EntityStringConstants,
     build_entity_string,
@@ -247,18 +247,8 @@ def link_neural(
             for t, a, b in zip(text, cs, ce)
         ]
         ctx = enc(contexts, dim)
-        k = max(len(c) for c in cand_qids)
-        ent = np.zeros((n, k, dim), dtype=np.float64)
-        mask = np.zeros((n, k), dtype=bool)
-        qlists = []
-        for i, cands in enumerate(cand_qids):
-            cands = list(cands)
-            qlists.append(cands)
-            for j, q in enumerate(cands):
-                row = qid2row.get(q)
-                if row is not None:
-                    ent[i, j] = mat[row]
-                    mask[i, j] = True
+        qlists = [list(c) for c in cand_qids]
+        ent, mask = candidate_matrix(qlists, qid2row, mat)
         probs, arg = score_batch(ctx, ent, mask)
         qid_pred = [qlists[i][arg[i]] if mask[i].any() else "-1" for i in range(n)]
         top = probs[np.arange(n), arg]

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import re
 from functools import lru_cache
+from itertools import accumulate
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -59,9 +60,9 @@ _MENTION_SCHEMA = ArrayType(
 _RE_TOKEN = re.compile(r"\S+")
 
 # texts where every token lnrms to itself (lowercased): only ASCII
-# alnum + single spaces — the precondition for the dead-pass skip in
-# ngram_extract_aliases (any punctuation/unicode can shrink a gram's
-# lnrm word count, e.g. 'Foo & Bar' -> 'foo bar'). Checked with
+# alnum + single spaces — the precondition for the clean tokenizer and
+# the whole-pass skip in ngram_extract_aliases (there every token is
+# solid, so no per-window count is needed). Checked with
 # fullmatch, NOT match+'$': '$' matches before a trailing newline, so
 # 'the spark\n' would wrongly take the clean path and drop the final
 # mention ('spark\n'.lower() never keys the dict).
@@ -124,6 +125,23 @@ def _pos_keep(tok: str) -> bool:
     return bool(n) and not n.isnumeric()
 
 
+def alias_max_words(aliases) -> int:
+    """Word count of the longest alias: the ``dict_max_words`` bound of
+    :func:`ngram_extract_aliases`. One scan of the dictionary, so plans
+    compute it once on the driver."""
+    return max((len(a.split()) for a in aliases), default=1)
+
+
+@lru_cache(maxsize=1 << 18)
+def _solid(tok: str) -> bool:
+    """True when ``tok`` is exactly one word in every alias-lookup
+    variant of :func:`ngram_extract_aliases` (see its window bound).
+    The only "'s"-led token :func:`tokenize_with_offsets` emits is "'s"
+    itself, which the possessive-drop test already rejects; the prefix
+    test keeps the rule true for any tokenizer."""
+    return not tok.startswith("'s") and lnrm(tok.replace("'s", "")) != ""
+
+
 def ngram_extract_aliases(
     text: str,
     all_aliases,
@@ -139,17 +157,27 @@ def ngram_extract_aliases(
     with the POS-free noun heuristic.
 
     ``dict_max_words`` (the longest alias's word count) enables an exact
-    dead-pass skip, valid ONLY when no token of the gram can shrink or
-    vanish under lnrm — i.e. the text is pure ASCII alnum+space, so an
-    n-token window always lnrms to exactly n words and cannot key a
-    shorter dict entry. Any other character (apostrophes merging "'s",
-    punctuation-only tokens that lnrm deletes — 'Foo & Bar' → 'foo bar',
-    combining marks) disables the skip for the whole row. ≈halves
-    extractor time on clean web text with a short dictionary; output
-    provably unchanged (tests/test_mentions.py pins the punctuated case).
+    window bound. Call a token *solid* when it stays exactly one word
+    under every lookup variant below (:func:`_solid`): it does not start
+    with "'s" and ``lnrm(tok.replace("'s", ""))`` is non-empty. Why each
+    variant keeps one word per solid token: tokens hold no whitespace,
+    and lower/NFD never creates any, so lnrm's words are the tokens that
+    keep a character, separated by the join's spaces; the possessive
+    merge (" 's" → "'s") only glues a token that starts with "'s" onto
+    its left neighbour; the possessive drop ("'s" → "") cannot span a
+    space, so it acts per token; the punctuation strip on an lnrm image
+    deletes nothing (lnrm keeps no ASCII punctuation) and every
+    character lnrm keeps survives lnrm again. So a window holding more
+    solid tokens than ``dict_max_words`` yields variants that are all
+    longer than every alias and can match none: it is skipped in O(1)
+    from a prefix count, before any slicing, joining or lnrm. On pure
+    ASCII alnum+space text every token is solid, so the whole pass
+    n > ``dict_max_words`` is skipped. Punctuation-only tokens, "'s"
+    pieces and lone combining marks are not solid, which is what lets
+    'Foo & Bar' still reach the alias 'foo bar'.
 
     ``_generic_only`` (tests only) disables every fast path — the clean
-    tokenizer, the dead-pass skip, and the specialized unigram pass — so
+    tokenizer, the window bound, and the specialized unigram pass — so
     differential tests (tests/test_mentions.py hypothesis fuzz) can pin
     the optimized paths against the one generic loop.
     """
@@ -162,8 +190,12 @@ def ngram_extract_aliases(
     keep = [_pos_keep(t) for t, _ in toks]
     used: list[tuple[str, int, int]] = []
     n_toks = len(toks)
+    bounded = dict_max_words is not None and not _generic_only
+    if bounded and not skip_safe:
+        solid = list(accumulate((_solid(t) for t, _ in toks), initial=0))
     for n in range(min(max_alias_len, n_toks), min_alias_len - 1, -1):
-        if dict_max_words is not None and n > dict_max_words and skip_safe:
+        cut = bounded and n > dict_max_words
+        if cut and skip_safe:
             continue
         if n == 1 and not _generic_only:
             # specialized single-token pass (the hot pass on web text):
@@ -205,6 +237,8 @@ def ngram_extract_aliases(
                 used.append((final, start_char, end_char))
             continue
         for start in range(0, n_toks - n + 1):
+            if cut and solid[start + n] - solid[start] > dict_max_words:
+                continue
             gram = toks[start : start + n]
             start_char = gram[0][1]
             end_char = gram[-1][1] + len(gram[-1][0])
@@ -270,15 +304,13 @@ def extract_mentions_ngram(
     marisa trie shared across pool workers (extract_mentions.py:130).
     """
 
+    # feeds the window bound inside ngram_extract_aliases; scanned once
+    # here on the driver, not once per batch on every executor
+    dict_w = alias_max_words(alias_set_bc.value)
+
     @F.pandas_udf(_MENTION_SCHEMA)
     def _extract(texts: pd.Series) -> pd.Series:
         aliases = alias_set_bc.value
-        # dict_max_words feeds the per-text dead-pass skip inside
-        # ngram_extract_aliases: on pure-alnum text every pass with
-        # n > longest-alias-words is provably matchless; on punctuated
-        # text lnrm can shrink a gram's word count, so all passes run
-        # (the reference hardcodes max_alias_len=6)
-        dict_w = max((len(a.split()) for a in aliases), default=1)
         return texts.map(
             lambda t: []
             if t is None
@@ -317,10 +349,11 @@ def extract_mentions_ngram_from_html(
     is deterministic and is exactly what the staged plan ran first."""
     from bootleg_spark.functions.textproc import extract_html_text
 
+    dict_w = alias_max_words(alias_set_bc.value)
+
     @F.pandas_udf(_MENTION_SCHEMA)
     def _extract(htmls: pd.Series) -> pd.Series:
         aliases = alias_set_bc.value
-        dict_w = max((len(a.split()) for a in aliases), default=1)
 
         def one(h):
             if h is None:

@@ -31,7 +31,11 @@ from bootleg_spark.operators.linking import (
     link_neural,
     link_popularity,
 )
-from bootleg_spark.operators.mentions import extract_mentions_ngram, extract_mentions_word
+from bootleg_spark.operators.mentions import (
+    alias_max_words,
+    extract_mentions_ngram,
+    extract_mentions_word,
+)
 from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
 from bootleg_spark.sources.synth import build_dims, pages_table
 
@@ -77,9 +81,9 @@ class KgPipeline:
         self.dims = build_dims(spark, sf_dir)
         alias_rows = [r["alias"] for r in self.dims["aliases"].select("alias").collect()]
         self.alias_set_bc = spark.sparkContext.broadcast(frozenset(alias_rows))
-        # longest alias word count: drives the extractor dead-pass skip
+        # longest alias word count: drives the extractor's window bound
         # and the relational fast-path dispatch (linked_fused)
-        self.dict_max_words = max((len(a.split()) for a in alias_rows), default=1)
+        self.dict_max_words = alias_max_words(alias_rows)
         # pre-group + cache the candidate arrays once: every query joins
         # against this (the reference builds its alias trie once at init,
         # bootleg_annotator.py:240-248). ONE collect both materializes the
@@ -201,10 +205,11 @@ class KgPipeline:
         alias_bc = self.alias_set_bc
         mat_bc = self.ent_matrix_bc
         cand_bc = self.cand_dict_bc
+        dict_w = self.dict_max_words
         dim = self.dim
         window = S.MAX_SEQ_WINDOW_LEN
 
-        from bootleg_spark.functions.embedding import score_batch
+        from bootleg_spark.functions.embedding import candidate_matrix, score_batch
         from bootleg_spark.functions.textproc import extract_context, extract_html_text
         from bootleg_spark.operators.mentions import ngram_extract_aliases
 
@@ -218,7 +223,6 @@ class KgPipeline:
             aliases = alias_bc.value
             qid2row, mat = mat_bc.value
             cands = cand_bc.value
-            dict_w = max((len(a.split()) for a in aliases), default=1)
             for pdf in batches:
                 url_o, doc_o, pos_o, al_o, cs_o, ce_o, ctx_o, cl_o = ([] for _ in range(8))
                 for url, doc_id, html in zip(pdf["url"], pdf["doc_id"], pdf["html"]):
@@ -242,15 +246,7 @@ class KgPipeline:
                     )
                     continue
                 ctx = enc(ctx_o, dim)
-                k = max(len(c) for c in cl_o)
-                ent = np.zeros((n, k, dim))
-                mask = np.zeros((n, k), dtype=bool)
-                for i, cl in enumerate(cl_o):
-                    for j, q in enumerate(cl):
-                        row = qid2row.get(q)
-                        if row is not None:
-                            ent[i, j] = mat[row]
-                            mask[i, j] = True
+                ent, mask = candidate_matrix(cl_o, qid2row, mat)
                 probs, arg = score_batch(ctx, ent, mask)
                 yield pd.DataFrame(
                     {
@@ -436,11 +432,12 @@ class KgPipeline:
         alias_bc = self.alias_set_bc
         mat_bc = self.ent_matrix_bc
         cand_bc = self.cand_dict_bc
+        dict_w = self.dict_max_words
         rel_bc = self.rel_dict_bc
         dim = self.dim
         window = S.MAX_SEQ_WINDOW_LEN
 
-        from bootleg_spark.functions.embedding import score_batch
+        from bootleg_spark.functions.embedding import candidate_matrix, score_batch
         from bootleg_spark.functions.textproc import extract_context, extract_html_text
         from bootleg_spark.operators.mentions import ngram_extract_aliases
 
@@ -451,7 +448,6 @@ class KgPipeline:
             qid2row, mat = mat_bc.value
             cands = cand_bc.value
             rels = rel_bc.value
-            dict_w = max((len(a.split()) for a in aliases), default=1)
             for pdf in batches:
                 # pass 1: mentions + contexts, page boundaries remembered
                 ctx_o, cl_o, bounds = [], [], []
@@ -468,15 +464,7 @@ class KgPipeline:
                 n = len(ctx_o)
                 if n:
                     ctx = enc(ctx_o, dim)
-                    k = max(len(c) for c in cl_o)
-                    ent = np.zeros((n, k, dim))
-                    mask = np.zeros((n, k), dtype=bool)
-                    for i, cl in enumerate(cl_o):
-                        for j, q in enumerate(cl):
-                            row = qid2row.get(q)
-                            if row is not None:
-                                ent[i, j] = mat[row]
-                                mask[i, j] = True
+                    ent, mask = candidate_matrix(cl_o, qid2row, mat)
                     probs, arg = score_batch(ctx, ent, mask)
                     top = probs[np.arange(n), arg]
                     for lo, hi in bounds:

@@ -3,6 +3,7 @@
 (mention_extractor_utils.py semantics)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from bootleg_spark.operators.mentions import (
     extract_mentions_ngram,
@@ -61,7 +62,8 @@ def test_capitalized_start_exception():
 def test_dead_pass_skip_is_output_preserving():
     """Regression (round-2 advice): lnrm deletes punctuation-only tokens,
     so a (dict_max_words+1)-token gram like 'Foo & Bar' collapses to a
-    shorter dict alias. The dead-pass skip must not fire on such text."""
+    shorter dict alias. The window bound must not skip such a gram: '&'
+    is not a solid token."""
     aliases = frozenset({"foo bar"})
     expected = [("foo bar", 4, 13)]
     got = ngram_extract_aliases(
@@ -186,7 +188,7 @@ def test_relational_extractor_equals_python(spark):
 
 
 # ---------------------------------------------------------------------------
-# Differential fuzz: every fast path (clean tokenizer, dead-pass skip,
+# Differential fuzz: every fast path (clean tokenizer, window bound,
 # specialized unigram pass) must be output-identical to the one generic
 # loop. The round-2 high-severity bug (lnrm-collapsed grams escaping the
 # dead-pass skip on punctuated text) is exactly the class this pins.
@@ -227,6 +229,99 @@ def test_fast_paths_match_generic_extractor(text):
 def test_clean_tokenizer_matches_finditer(text):
     # precondition of the clean fast path: pure alnum+space
     assert tokenize_with_offsets(text, clean=True) == tokenize_with_offsets(text, clean=False)
+
+
+# The window bound: with dict_max_words=1 every window holding two solid
+# tokens is skipped on punctuated text. The vocabulary is the tokens that
+# are NOT solid or that change shape under a lookup variant: possessive
+# pieces that merge left ("'s", "'sfoo"), "''ss" (an apostrophe peeled
+# off a "'s"-led rest), punctuation-only tokens lnrm deletes, a lone and
+# an attached decomposed combining mark, a final sigma (whose case form
+# depends on its right neighbour once a possessive merges), and "'s"
+# wrapped in non-ASCII marks, a token that vanishes only when the
+# possessive is dropped.
+_BOUND_VOCAB = [
+    "spark", "Spark", "foo", "data", "the", "and", "s", "S", "42",
+    "'s", "'sfoo", "''ss", "'", "''", "--", "&", ".", ",", "(", ")",
+    "-foo-", "it's", "Spark's", "x,y", "a.b",
+    "e\u0301", "\u0301", "cafe\u0301", "café", "ΟΔΟΣ", "Οδός",
+    "«'s»", "\u0301's\u0301",
+]
+
+
+def _single_word_aliases(vocab):
+    """Every one-word lnrm image of a token or of two glued tokens, with
+    and without possessives — the strings a collapsed window can become."""
+    from bootleg_spark.functions.lnrm import lnrm
+
+    forms = set()
+    for a in vocab:
+        for b in ["", *vocab]:
+            for g in (a + b, a + " " + b, (a + b).replace("'s", "")):
+                w = lnrm(g)
+                if w and len(w.split()) == 1:
+                    forms.add(w)
+    return frozenset(forms)
+
+
+_BOUND_ALIASES = _single_word_aliases(_BOUND_VOCAB)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.sampled_from(_BOUND_VOCAB), min_size=0, max_size=10).map(" ".join))
+def test_window_bound_matches_generic_single_word_dict(text):
+    from bootleg_spark.operators.mentions import alias_max_words
+
+    assert alias_max_words(_BOUND_ALIASES) == 1
+    fast = ngram_extract_aliases(text, _BOUND_ALIASES, dict_max_words=1)
+    generic = ngram_extract_aliases(text, _BOUND_ALIASES, _generic_only=True)
+    assert fast == generic, text
+
+
+def _punctuated_corpus(seed, n_docs):
+    """Seeded web-like text: Zipf-ish words, stop words, and one token in
+    five capitalized, punctuated, possessive or accented."""
+    import random
+
+    rng = random.Random(seed)
+    words = ["spark", "data", "graph", "entity", "link", "table", "node", "cafe",
+             "query", "page", "rank", "type"]
+    stops = ["the", "of", "and", "to", "a", "in", "is", "it"]
+    forms = [
+        lambda w: w.capitalize(), lambda w: w + ",", lambda w: w + ".",
+        lambda w: w + "'s", lambda w: "(" + w + ")", lambda w: '"' + w + '"',
+        lambda w: w + " &", lambda w: w + " --", lambda w: w + " 's",
+        lambda w: w.replace("e", "e\u0301"), lambda w: w.upper() + "!",
+    ]
+    docs = []
+    for _ in range(n_docs):
+        toks = []
+        for _ in range(rng.randint(5, 60)):
+            w = rng.choice(stops) if rng.random() < 0.4 else words[
+                min(int(rng.paretovariate(1.1)) - 1, len(words) - 1)]
+            toks.append(rng.choice(forms)(w) if rng.random() < 0.2 else w)
+        docs.append(" ".join(toks))
+    return docs
+
+
+@pytest.mark.parametrize(
+    "aliases",
+    [
+        frozenset({"spark", "data", "graph", "entity", "cafe", "sparks", "datas", "rank"}),
+        frozenset({"spark", "data graph", "entity link", "cafe", "graphs", "table node"}),
+    ],
+)
+def test_window_bound_matches_generic_on_punctuated_corpus(aliases):
+    from bootleg_spark.operators.mentions import alias_max_words
+
+    dict_w = alias_max_words(aliases)
+    n_mentions = 0
+    for text in _punctuated_corpus(seed=20261017, n_docs=1500):
+        fast = ngram_extract_aliases(text, aliases, 1, 6, dict_max_words=dict_w)
+        generic = ngram_extract_aliases(text, aliases, 1, 6, _generic_only=True)
+        assert fast == generic, text
+        n_mentions += len(fast)
+    assert n_mentions > 300  # the corpus really produces mentions
 
 
 def test_relational_multiword_extractor_equals_python(spark):

@@ -93,7 +93,7 @@ def test_bucket_pairs_match_self_join(docs):
 
 
 def test_featurize_texts_batch_scatter_bit_identical(docs):
-    """The np.add.at batch featurizer must be BIT-identical to the
+    """The one-scatter batch featurizer must be BIT-identical to the
     per-text reference form (±1 integer accumulations are exact in
     float64, so no summation-order drift is tolerated)."""
     from bootleg_spark.functions.embedding import featurize_texts, featurize_tokens
