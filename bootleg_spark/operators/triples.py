@@ -84,6 +84,21 @@ def triples_from_doc_entities(
     )
 
 
+def subj_range_layout(tri: DataFrame, n_files: int) -> DataFrame:
+    """The graph table's file layout, shared by every writer of it:
+    ``n_files`` data files range-partitioned on ``subj``, so each file
+    carries a tight subj [min, max] in the snapshot manifest and
+    entity-centric reads (``prune=("subj", "=", qid)``) skip the rest.
+
+    A full build writes several files; a crawl batch or micro-batch is
+    a delta and writes ONE (``n_files=1``) — which also spares Spark's
+    ``RangePartitioner`` its bounds-sampling job. Left to the plan's
+    last shuffle instead, a delta lands as one subj-unbounded file per
+    non-empty shuffle partition, and every later read opens them all.
+    ``snaptable.compact`` merges accumulated delta files."""
+    return tri.repartitionByRange(n_files, "subj")
+
+
 def salted_distinct(df: DataFrame, cols: list[str], salt_n: int = 32) -> DataFrame:
     """Two-stage dedup for heavily skewed keys: local dedup within a
     salted repartition, then global dedup. Spark's dropDuplicates already

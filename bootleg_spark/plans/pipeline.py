@@ -36,7 +36,11 @@ from bootleg_spark.operators.mentions import (
     extract_mentions_ngram,
     extract_mentions_word,
 )
-from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
+from bootleg_spark.operators.triples import (
+    doc_entities,
+    subj_range_layout,
+    triples_from_doc_entities,
+)
 from bootleg_spark.sources.synth import build_dims, pages_table
 
 
@@ -703,7 +707,7 @@ def snapshot_triples(
     # the manifest BEFORE the atomic publish — committed snapshots are
     # write-once and never edited after the fact)
     return st.write_table(
-        tri.repartitionByRange(n_files, "subj"),
+        subj_range_layout(tri, n_files),
         table,
         mode=mode,
         extra={
@@ -746,8 +750,11 @@ def incremental_kg_update(
     The anti-join gives the KG its set semantics across batches
     (``pipe.triples`` dedups within a batch only); at scale it is a
     shuffle join on (subj, pred, obj) against the graph — the standard
-    insert-if-absent shape, prunable further by reading only the
-    subj-range files the batch's triples can touch.
+    insert-if-absent shape. Each batch's new edges land as ONE data
+    file range-partitioned on ``subj`` (:func:`subj_range_layout`, the
+    layout :func:`snapshot_triples` writes with ``n_files``): the graph
+    grows by one file per crawl batch, each with a subj [min, max] in
+    the manifest that entity-centric reads prune on.
 
     Returns ``{"consumed_version", "new_triples", "commit"}`` or
     ``None`` when the consumer is caught up."""
@@ -763,7 +770,7 @@ def incremental_kg_update(
             "subj", "pred", "obj"
         )
         tri = tri.join(existing, ["subj", "pred", "obj"], "left_anti")
-    commit = st.commit_stream_batch(tri, graph_table, batch_id=v)
+    commit = st.commit_stream_batch(subj_range_layout(tri, 1), graph_table, batch_id=v)
     st.ack_consumed(pages_table, group, v)
     return {
         "consumed_version": v,

@@ -478,11 +478,12 @@ def _write_data_files(
 
 
 def _keep_nonempty(rewritten: list[dict], table: str) -> list[dict]:
-    """Drop zero-row rewrite outputs (Iceberg drops empty files): a data
+    """Drop zero-row write outputs (Iceberg drops empty files): a data
     file whose every row matched a DELETE/MERGE predicate rewrites to an
-    empty file — keeping it would bloat manifests and make partition
-    listings lie. No snapshot references these yet, so the bytes go
-    immediately rather than waiting for vacuum's orphan sweep."""
+    empty file, and an empty append writes one — keeping it would bloat
+    manifests and make partition listings lie. No snapshot references
+    these yet, so the bytes go immediately rather than waiting for
+    vacuum's orphan sweep."""
     for e in rewritten:
         if e["rows"] == 0:
             with contextlib.suppress(OSError):
@@ -568,7 +569,10 @@ def write_table(
             )
         _check_append_schema(base0, df.schema)
     t0 = _time.time()
-    new_files = _write_data_files(df, table, spec)
+    # an empty frame still commits (the snapshot carries the stream
+    # watermark) but adds no file: Spark writes one 0-row parquet file
+    # for an empty job, and every later full read would open it
+    new_files = _keep_nonempty(_write_data_files(df, table, spec), table)
     write_secs = round(_time.time() - t0, 3)
 
     schema_json = df.schema.json()
@@ -1563,9 +1567,13 @@ def compact(
     """Bin-pack small data files into ~``target_rows`` files and commit
     the result as a new snapshot — Iceberg's rewrite_data_files,
     the answer to the small-files problem that per-batch streaming
-    commits accumulate (every ``commit_stream_batch`` adds a file; a
-    year of micro-batches is 10^5 files whose open/plan overhead
-    eventually dwarfs the data).
+    commits accumulate (the graph table's incremental writers,
+    ``incremental_kg_update`` and ``start_snapshot_triple_stream``,
+    add one subj-ranged data file per non-empty batch; a year of
+    micro-batches is 10^5 files whose open/plan overhead eventually
+    dwarfs the data). Inputs are coalesced, not re-sorted: a rewritten
+    file's column ranges are the union of its inputs', so merging
+    deltas trades their per-file subj pruning for fewer opens.
 
     Rewrites ONLY files with fewer than ``target_rows`` rows; row
     content is unchanged (same rows, fewer files) so readers see no

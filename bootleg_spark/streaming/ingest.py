@@ -35,7 +35,11 @@ from pyspark.sql import functions as F
 from bootleg_spark.operators.candidates import attach_candidates
 from bootleg_spark.operators.linking import link_popularity
 from bootleg_spark.operators.mentions import extract_mentions_word
-from bootleg_spark.operators.triples import doc_entities, triples_from_doc_entities
+from bootleg_spark.operators.triples import (
+    doc_entities,
+    subj_range_layout,
+    triples_from_doc_entities,
+)
 from bootleg_spark.sources import store
 
 N_BUCKETS = 64
@@ -126,11 +130,15 @@ def start_snapshot_triple_stream(
     the whole history time-travelable. The bucketed-store variant
     (:func:`start_triple_stream`) dedups at ROW grain (content
     anti-join); this one dedups at BATCH grain, which is the cheap and
-    sufficient rule when the source is replay-deterministic."""
+    sufficient rule when the source is replay-deterministic. Each
+    micro-batch lands as at most one subj-ranged data file (the graph
+    table's layout, :func:`subj_range_layout`)."""
     from bootleg_spark.sources import snaptable as st
 
     def _commit(batch: DataFrame, batch_id: int) -> None:
-        st.commit_stream_batch(triples_for_batch(batch, dims), table, batch_id)
+        st.commit_stream_batch(
+            subj_range_layout(triples_for_batch(batch, dims), 1), table, batch_id
+        )
 
     writer = (
         stream_pages(spark, src_dir, schema)

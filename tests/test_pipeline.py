@@ -307,6 +307,9 @@ def test_incremental_kg_update_exactly_once(spark, tmp_path):
     st.commit_stream_batch(pages.where("doc_id % 2 = 0"), pt, batch_id=0)
     r1 = incremental_kg_update(pipe, pt, gt, scorer="popularity")
     assert r1 is not None and r1["consumed_version"] == 1
+    # graph layout: one data file per crawl batch, not one per shuffle
+    # partition
+    assert len(st.load_snapshot(gt)["files"]) == 1
     g1 = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
     # caught up: no-op
     assert incremental_kg_update(pipe, pt, gt, scorer="popularity") is None
@@ -315,12 +318,21 @@ def test_incremental_kg_update_exactly_once(spark, tmp_path):
     st.commit_stream_batch(pages.where("doc_id % 2 = 1"), pt, batch_id=1)
     r2 = incremental_kg_update(pipe, pt, gt, scorer="popularity")
     assert r2 is not None and r2["consumed_version"] == 2
+    assert r2["new_triples"] > 0 and len(st.load_snapshot(gt)["files"]) == 2
     got = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
     want = sorted(
         tuple(r) for r in pipe.triples(pages, scorer="popularity").collect()
     )
     assert got == want  # full-corpus parity, no duplicate edges
     assert len(g1) < len(got)
+    # every file carries subj stats, so a pruned entity read returns
+    # exactly the unpruned filter's rows
+    def subj_rows(q, prune):
+        df = st.read_table(spark, gt, prune=prune).where(F.col("subj") == q)
+        return sorted(tuple(r) for r in df.collect())
+
+    for q in sorted({t[0] for t in got}):
+        assert subj_rows(q, ("subj", "=", q)) == subj_rows(q, None)
 
     # crash-replay seam: offset rolled back (crash before ack) — the
     # replayed window adds nothing (anti-join + watermark both guard)
@@ -331,3 +343,10 @@ def test_incremental_kg_update_exactly_once(spark, tmp_path):
     assert r3 is not None and r3["new_triples"] == 0
     again = sorted(tuple(r) for r in st.read_table(spark, gt).collect())
     assert again == want
+
+    # the full-build writer keeps its n_files subj-range layout
+    from bootleg_spark.plans.pipeline import snapshot_triples
+
+    full_t = str(tmp_path / "full_graph")
+    snapshot_triples(pipe, full_t, scorer="popularity", n_files=4)
+    assert len(st.load_snapshot(full_t)["files"]) == 4

@@ -289,6 +289,28 @@ def test_compact_preserves_stream_watermark(spark, docs, tmp_path):
     assert st.read_table(spark, table).count() == n_before + small.count()
 
 
+def test_empty_append_commits_without_a_file(spark, docs, tmp_path):
+    """A stream batch with no rows (a crawl cycle whose anti-join found
+    no new edge) still commits — the batch id must advance the replay
+    guard — but adds no 0-row data file for every later read to open."""
+    table = str(tmp_path / "t")
+    empty = docs.where("grp < 0")
+    before = st.commit_stream_batch(docs.where("grp = 0"), table, batch_id=0)
+    s = st.commit_stream_batch(empty, table, batch_id=1)
+    assert s is not None and s["version"] == before["version"] + 1
+    assert s["stream_batch_id"] == 1 and s["new_rows"] == 0
+    assert s["files"] == before["files"]
+    assert len(os.listdir(os.path.join(table, "data"))) == len(before["files"])
+    # replaying the empty batch is a no-op
+    assert st.commit_stream_batch(empty, table, batch_id=1) is None
+    assert st.latest_version(table) == s["version"]
+    # an empty overwrite commits a file-less snapshot that reads empty
+    o = st.write_table(empty, table)
+    assert o["files"] == [] and o["total_rows"] == 0
+    assert st.read_table(spark, table).columns == docs.columns
+    assert st.read_table(spark, table).count() == 0
+
+
 def test_vacuum_sweeps_unreferenced_orphans(spark, docs, tmp_path):
     """Files referenced by NO snapshot (abandoned commit) are swept by
     vacuum once past the grace age — and in-flight-age files are not."""

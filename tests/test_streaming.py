@@ -212,6 +212,13 @@ def test_snapshot_stream_exactly_once(spark, tmp_path):
     q = start_snapshot_triple_stream(spark, src + "/*", table, ckpt, dims, docs.schema)
     q.awaitTermination(300)
 
+    # each micro-batch commit adds at most one (subj-ranged) data file
+    n_files = 0
+    for v in range(1, st.latest_version(table) + 1):
+        snap = st.load_snapshot(table, v)
+        assert len(snap["files"]) - n_files <= 1, (v, len(snap["files"]), n_files)
+        n_files = len(snap["files"])
+
     expected = {tuple(r) for r in triples_for_batch(docs, dims).collect()}
     got = {
         tuple(r)
